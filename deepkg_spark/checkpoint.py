@@ -20,10 +20,22 @@ partitioned corpus. This module provides the cluster-scale version:
 - Commit order: data first, manifest second. A crash between the two replays
   the split (idempotent); a manifest row therefore PROVES its split's data is
   complete.
+- A manifest commit is one parquet file encoded on the driver (pyarrow) and
+  written through the path's Hadoop FileSystem — no Spark job. It is written
+  under a ``_tmp-`` name, which Spark's reader ignores, then renamed to
+  ``part-<uuid>.parquet``; a crash before the rename leaves only an ignored
+  remnant, so the commit is all-or-nothing.
+- Stage and split outputs are read back for their checksums with the schema
+  of the frame just written, so the read-back runs no schema-inference job;
+  the counters still come from the data on disk.
 """
 
 from __future__ import annotations
 
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +47,11 @@ MANIFEST_SCHEMA = (
     "job_id string, split_id int, row_count long, checksum long, "
     "status string, attempt int"
 )
+_ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
+_MANIFEST_ARROW = pa.schema([
+    (name, _ARROW_TYPES[typ])
+    for name, typ in (f.split() for f in MANIFEST_SCHEMA.split(","))
+])
 
 
 def split_expr(n_splits: int, key_expr: str = "concat_ws('/', repo, path)") -> str:
@@ -64,11 +81,36 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def write_manifest(spark: SparkSession, manifest_path: str, rows: list[tuple]) -> None:
+    """Append `rows` (MANIFEST_SCHEMA tuples) to the manifest as ONE parquet
+    file, encoded on the driver and written through the Hadoop FileSystem:
+    first as ``_tmp-<uuid>.parquet`` (ignored by Spark's reader), then
+    renamed to ``part-<uuid>.parquet``. Runs no Spark job."""
+    table = pa.Table.from_pylist(
+        [dict(zip(_MANIFEST_ARROW.names, r)) for r in rows], schema=_MANIFEST_ARROW
+    )
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs, mdir = _hadoop_fs(spark, manifest_path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    name = uuid.uuid4().hex
+    tmp = jpath(mdir, f"_tmp-{name}.parquet")
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, jpath(mdir, f"part-{name}.parquet")):
+        raise OSError(f"manifest commit: could not rename {tmp} in {manifest_path}")
+
+
 def read_manifest(spark: SparkSession, manifest_path: str, job_id: str) -> DataFrame:
     if path_exists(spark, manifest_path):
         df = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
         return df.filter((F.col("job_id") == job_id) & (F.col("status") == "ok"))
-    return spark.createDataFrame([], MANIFEST_SCHEMA)
+    # limit(0) plans as an empty local relation: collecting it (or joining
+    # against it) runs no job, where a bare empty createDataFrame runs one
+    return spark.createDataFrame([], MANIFEST_SCHEMA).limit(0)
 
 
 def run_incremental(
@@ -123,7 +165,7 @@ def run_incremental(
     out_cols = [c for c in result.columns if c != SPLIT_COL]
     stats = {
         r[SPLIT_COL]: (r["row_count"], r["checksum"])
-        for r in spark.read.parquet(data_path)
+        for r in spark.read.schema(result.schema).parquet(data_path)
         .filter(F.col(SPLIT_COL).isin(pend_splits))
         .groupBy(SPLIT_COL)
         .agg(
@@ -139,9 +181,7 @@ def run_incremental(
     for s in sorted(pend_splits):
         row_count, checksum = stats.get(s, (0, 0))
         manifest_rows.append((job_id, int(s), int(row_count), int(checksum), "ok", 1))
-    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(manifest_path)
+    write_manifest(spark, manifest_path, manifest_rows)
     rows = sum(r[2] for r in manifest_rows)
     return {"pending": len(pend_splits), "processed": len(pend_splits), "rows": rows}
 
@@ -160,12 +200,15 @@ def run_staged(
 
     `stages` is an ordered list of (name, fn) with fn(prev: DataFrame|None)
     -> DataFrame; each stage's output is parquet-materialized at
-    out_dir/stage_<i>_<name>, then manifested (data first, manifest second
-    — same commit protocol as run_incremental, manifest split_id column
-    reused as the stage index). Resume skips the longest CONTIGUOUS
-    manifested prefix and reloads its last output; anything after the first
-    missing stage re-runs (mode=overwrite makes a half-written crash
-    remnant harmless). Stages must be deterministic for the lineage
+    out_dir/stage_<i>_<name>, read back with the written frame's schema for
+    its row count and checksum, then manifested by one driver-written file
+    (write_manifest: temporary name, then rename). Data first, manifest
+    second — the same commit protocol as run_incremental, with the manifest
+    split_id column reused as the stage index. A boundary therefore costs
+    the stage's own write plus the checksum aggregate and nothing else.
+    Resume skips the longest CONTIGUOUS manifested prefix and reloads its
+    last output; anything after the first missing stage re-runs
+    (mode=overwrite makes a half-written crash remnant harmless). Stages must be deterministic for the lineage
     checksums to be meaningful — every stage here is (hash-gated filters,
     hash sampling, min-id survivors).
 
@@ -184,19 +227,20 @@ def run_staged(
     for i, (name, fn) in enumerate(stages):
         path = f"{out_dir}/stage_{i:02d}_{name}"
         if i < prefix:
-            prev = spark.read.parquet(path)
+            if i == prefix - 1:  # only the last committed output feeds on
+                prev = spark.read.parquet(path)
             counts[name] = int(done[i])
             continue
-        fn(prev).write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
+        df = fn(prev)
+        df.write.mode("overwrite").parquet(path)
+        out = spark.read.schema(df.schema).parquet(path)
         agg = out.agg(
             F.count(F.lit(1)).alias("c"),
             (F.sum(F.expr(_row_digest(out.columns))) % _CHECK_MOD).alias("k"),
         ).collect()[0]
-        spark.createDataFrame(
-            [(job_id, i, int(agg["c"]), int(agg["k"] or 0), "ok", 1)],
-            MANIFEST_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(manifest_path)
+        write_manifest(
+            spark, manifest_path, [(job_id, i, int(agg["c"]), int(agg["k"] or 0), "ok", 1)]
+        )
         prev = out
         counts[name] = int(agg["c"])
     return counts, prev

@@ -123,9 +123,17 @@ def asof_join(
     linear in |left| + |right|. At 100 TB the user_id key space is huge and
     uniform, so the single repartition is the floor for any per-user
     computation.
+
+    Raises ValueError when left_type == right_type: the tags cannot tell the
+    two sides apart, so the plan would silently return no rows.
     """
     from pyspark.sql import Window
 
+    if left_type == right_type:
+        raise ValueError(
+            f"asof_join: left_type and right_type are both {left_type!r}; "
+            "an as-of join needs two distinct event types"
+        )
     # tag 0 = right (visible to same-ts lefts), 1 = left. ONE scan with a
     # tag expression — the former union of two filtered branches read the
     # input twice (the pushed-down filters make the subtrees differ, so

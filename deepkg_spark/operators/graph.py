@@ -18,7 +18,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -113,7 +113,8 @@ def connected_components(
     Algorithm: iterative hash-min label propagation — each round every vertex
     takes min(own label, neighbor labels); one equi-join + one groupBy(min)
     per round, converging in <= graph-diameter rounds with an early-exit
-    convergence probe (count of lowered labels). Dedup-cluster graphs have
+    convergence probe (count of lowered labels, observed in the round's own
+    job — no separate count). Dedup-cluster graphs have
     tiny diameters, so 2-4 rounds is typical; the per-round plan is all
     partial-aggregable shuffles on vertex id (no collect of edges, no driver
     graph). For adversarially long chains at 100 TB, swap in the
@@ -142,22 +143,22 @@ def connected_components(
     for _ in range(max_iter):
         nbr = (
             sym.join(labels, sym["dst"] == labels["v"])
-            .select(F.col("src").alias("v"), "label")
+            .select(F.col("src").alias("v"), "label", F.lit(None).alias("own"))
         )
+        # the convergence probe rides the round's own job: each vertex carries
+        # its current label as `own`, and an Observation counts the lowered
+        # labels while localCheckpoint materializes the round
+        probe = Observation()
         new_labels = (
-            labels.select("v", "label")
+            labels.select("v", "label", F.col("label").alias("own"))
             .unionByName(nbr)
             .groupBy("v")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.min("own").alias("own"))
+            .observe(probe, F.count_if(F.col("label") < F.col("own")).alias("changed"))
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.label") < F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
+        changed = probe.get["changed"]
+        labels = new_labels.select("v", "label")
         if changed == 0:
             break
     else:

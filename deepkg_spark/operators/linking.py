@@ -125,6 +125,11 @@ def bm25_topn(
       - query tokens JOIN postings on term: the only wide op; skew on hot
         terms is handled by AQE skew-join (enabled in session.py).
       - groupBy(qid, term_id) partial+final sum, then per-qid window top-N.
+
+    The built index and its scalar stats are reused by the next call over a
+    dictionary with the same logical plan (sameSemantics) and topn. A caller
+    that rewrites the dictionary's source files in place must call
+    release_bm25_caches() first, or that call reuses the stale index.
     """
     q_tok = queries.select(
         "qid", F.explode(F.expr(spark_mode_tokens("qtext", mode))).alias("term")

@@ -81,6 +81,21 @@ def test_offsets_point_at_surfaces(spark, sf_dir):
             assert c[r["subj_start"] : r["subj_start"] + len(r["subj"])] == r["subj"]
 
 
+def test_asof_join_rejects_same_left_and_right_type(spark):
+    """One event type on both sides cannot be tagged apart; the call fails
+    while the plan is built instead of returning an empty frame."""
+    import pytest
+
+    from deepkg_spark.operators.events import asof_join
+
+    ev = spark.createDataFrame(
+        [(1, 7, "2024-01-01 00:00:00", "click", 1.0)],
+        "event_id long, user_id long, ts string, event_type string, value double",
+    )
+    with pytest.raises(ValueError, match="left_type and right_type"):
+        asof_join(ev, left_type="click", right_type="click")
+
+
 def test_asof_join_oracle(spark, sf_dir):
     """As-of join vs the identical-ordering DuckDB window plan, plus spot
     semantics: every matched prior event is a click at-or-before the
